@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchenginepp_spark import oracle_sql as osql
+from searchenginepp_spark.frames import _local_df
 from searchenginepp_spark.oracle_sql import QUERY_SET, ROUND, TOP_K
 
 SF_DEFAULT = "/root/testdata/sf0.001"
@@ -164,8 +165,6 @@ def _docid_from_docno(res: DataFrame, k: int) -> DataFrame:
     spark = ranked.sparkSession
     out = [(r["qid"], r["docid"], r["rank"], r["score"])
            for r in rows if r["rank"] <= k]
-    from searchenginepp_spark.operators.query import _local_df
-
     return _local_df(spark, out, "qid long, docid long, rank long, score double")
 
 
@@ -459,8 +458,6 @@ def q_eval_metrics(spark, sf_dir):
     from searchenginepp_spark.operators.evaluation import evaluate_topk
 
     run = _topk(spark, sf_dir, "bm25", conjunctive=False)
-    from searchenginepp_spark.operators.query import _local_df
-
     qids = _local_df(spark, [(q,) for q, _ in QUERY_SET], "qid long")
     qrels = (
         _docs(spark, sf_dir).select("docid").crossJoin(qids)

@@ -123,31 +123,33 @@ def do_queries(workdir: str) -> dict:
     from pyspark.sql import functions as F
 
     from searchenginepp_spark.operators.query import (
-        decode_shards, query_terms_df, query_terms_local, resolve_docnos,
-        score_postings, topk,
+        decode_shards, lexicon_df, query_terms_df, query_terms_local,
+        resolve_docnos, score_postings, topk,
     )
 
+    reader = searcher.reader
     qs = [BENCH_QUERIES[3]]
     qt = query_terms_local(qs, stem=True)
     terms = sorted({t for _, t in qt})
     sc.setJobDescription("decomp: shards scan only")
-    timed("d_scan", lambda: noop(searcher.shards.filter(
+    timed("d_scan", lambda: noop(reader.shards.filter(
         F.col("term").isin(terms))), out)
     sc.setJobDescription("decomp: + decode")
     timed("d_decode", lambda: noop(decode_shards(
-        searcher.shards.filter(F.col("term").isin(terms)))), out)
+        reader.shards.filter(F.col("term").isin(terms)))), out)
     qterms = query_terms_df(spark, qt)
+    lexicon = lexicon_df(spark, reader.df(terms))
     scored = score_postings(
-        decode_shards(searcher.shards.filter(F.col("term").isin(terms))),
-        searcher.lexicon, qterms, searcher.n_docs, searcher.avgdl, "bm25")
+        decode_shards(reader.shards.filter(F.col("term").isin(terms))),
+        lexicon, qterms, reader.n_docs, reader.avgdl, "bm25")
     sc.setJobDescription("decomp: + score")
     timed("d_score", lambda: noop(scored), out)
-    res = topk(scored, qterms, searcher.lexicon, k=10)
+    res = topk(scored, qterms, lexicon, k=10)
     sc.setJobDescription("decomp: + topk")
     timed("d_topk", lambda: noop(res), out)
     sc.setJobDescription("decomp: + docnos")
     timed("d_full", lambda: noop(
-        resolve_docnos(res, searcher.docmap)), out)
+        resolve_docnos(res, reader.docmap)), out)
 
     ls = LocalSearcher(idx)
     t0 = time.perf_counter()

@@ -61,7 +61,7 @@ so pruning only improves.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import TYPE_CHECKING, Iterable
 
 import numpy as np
 import pandas as pd
@@ -74,8 +74,10 @@ from searchenginepp_spark.functions.codecs import (
     unary_decode, varbyte_decode,
 )
 
+if TYPE_CHECKING:
+    from searchenginepp_spark.operators.index_reader import IndexReader
+
 _RESULT_SCHEMA = "qid long, docid long, rank long, score double"
-_PARTIAL_SCHEMA = "qid long, docid long, score double"
 
 # Max postings of one query a single MaxScore task may hold before the
 # query is fanned out over docid ranges (level-1/level-2 split).
@@ -792,7 +794,7 @@ def _auto_n_ranges(qt: list[tuple[int, str]], df_by_term: dict[str, int],
     return max(1, -(-worst // range_target))
 
 
-def search_bmm(spark: SparkSession, index_root: str,
+def search_bmm(spark: SparkSession, index_root: str | IndexReader,
                queries: Iterable[tuple[int, str]], k: int = DEFAULT_TOP_K,
                scorer: str = "bm25", stem: bool = True,
                round_to: int | None = 6, n_ranges: int | None = None,
@@ -814,29 +816,19 @@ def search_bmm(spark: SparkSession, index_root: str,
     buys nothing and pays a full slicing pass — measured ~60% extra at toy
     scale (BENCH_r03: 3.20 s forced n_ranges=4 vs 1.99 s auto) — it exists
     for tests and for memory-tight executors with a lowered range_target.
+
+    index_root: an index directory, or the `IndexReader` of an open one
+    (`query.Searcher.search_bmm` passes its own, so stats are not re-read).
     """
     from searchenginepp_spark.config import BM25_B, BM25_K1
-    from searchenginepp_spark.operators.index_build import IndexPaths
+    from searchenginepp_spark.operators.index_reader import IndexReader
     from searchenginepp_spark.operators.query import (
-        query_terms_df, query_terms_local, resolve_docnos,
+        lexicon_df, query_terms_df, query_terms_local, resolve_docnos,
     )
 
-    from searchenginepp_spark.operators.query import _local_df
-
-    paths = IndexPaths(index_root)
-    # stats (1 row) and the |query terms| lexicon slice are driver-side
-    # pyarrow reads (row-group pruned, like the serving reader) — each used
-    # to be its own Spark job per search call; falls back to Spark reads
-    # for filesystems pyarrow cannot reach
-    try:
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
-
-        stats = pq.read_table(paths.stats).to_pylist()[0]
-    except Exception:
-        stats = spark.read.parquet(paths.stats).collect()[0]
-    n_docs = int(stats["n_docs"])
-    avgdl = (stats["sum_doclen"] / n_docs) if n_docs else 0.0
+    reader = (index_root if isinstance(index_root, IndexReader)
+              else IndexReader(index_root, spark))
+    n_docs, avgdl = reader.n_docs, reader.avgdl
     qt = query_terms_local(queries, stem=stem)
     qterms = query_terms_df(spark, qt)
     terms = sorted({t for _, t in qt})
@@ -844,82 +836,23 @@ def search_bmm(spark: SparkSession, index_root: str,
         return spark.createDataFrame(
             [], schema="qid long, docid long, docno string, rank long, score double")
 
-    try:
-        tbl = pads.dataset(paths.lexicon, format="parquet").to_table(
-            columns=["term", "df"], filter=pads.field("term").isin(terms))
-        lex_pairs = sorted(zip(tbl.column("term").to_pylist(),
-                               (int(d) for d in tbl.column("df").to_pylist())))
-        lexicon = _local_df(spark, lex_pairs, "term string, df long")
-        df_by_term = dict(lex_pairs)
-    except Exception:
-        lexicon = spark.read.parquet(paths.lexicon).filter(
-            F.col("term").isin(terms))
-        lex_rows = lexicon.collect()      # |query terms| rows — tiny
-        df_by_term = {r["term"]: int(r["df"]) for r in lex_rows}
+    df_by_term = reader.df(terms)
+    lexicon = lexicon_df(spark, df_by_term)
     if n_ranges is None:
         n_ranges = _auto_n_ranges(qt, df_by_term, range_target)
 
+    scan = reader.shards.filter(F.col("term").isin(terms))
     shards = (
-        spark.read.parquet(paths.shards)
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(lexicon.withColumnRenamed("df", "df_global")), "term")
+        scan.join(F.broadcast(lexicon.withColumnRenamed("df", "df_global")),
+                  "term")
         .join(F.broadcast(qterms), "term")
-        .withColumn("n_docs_f", F.lit(float(n_docs)))
-        .withColumn("avgdl_f", F.lit(float(avgdl)))
     )
     scorer_fn = _make_scorer(scorer, float(avgdl), BM25_K1, BM25_B)
     kk = int(k)
     rnd = round_to
     eps = 10.0 ** -rnd if rnd is not None else 0.0
 
-    span = None
-    if n_ranges > 1:
-        span = spark.read.parquet(paths.shards).filter(
-            F.col("term").isin(terms)).agg(
-            F.min("first_docid").alias("lo"), F.max("last_docid").alias("hi")
-        ).collect()[0]                    # metadata columns only — blobs pruned
-        if span["lo"] is None:
-            # none of the query terms exist in the index (ADVICE round 2):
-            # the span agg over zero shard rows returns NULLs.  Collapse to
-            # the single-task path, whose applyInPandas over the empty shard
-            # frame yields the same empty result as the exact path.
-            n_ranges = 1
-
-    if n_ranges <= 1:
-        def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(pdf["qid"].iloc[0])
-            lists = [_ListCursor(row, scorer)
-                     for row in pdf.itertuples(index=False)]
-            ids, sc = maxscore_query(lists, kk, scorer_fn, eps=eps,
-                                     groups=pdf["term"].tolist())
-            if rnd is not None:
-                sc = np.round(sc, rnd)
-            order = np.lexsort((ids, -sc))[:kk]
-            return pd.DataFrame({
-                "qid": np.full(order.size, qid, dtype=np.int64),
-                "docid": ids[order],
-                "rank": np.arange(1, order.size + 1, dtype=np.int64),
-                "score": sc[order],
-            })
-
-        results = shards.groupBy("qid").applyInPandas(
-            run_query, schema=_RESULT_SCHEMA)
-        return resolve_docnos(results, spark.read.parquet(paths.docmap))
-
-    # ---- two-level path: slice by docid range, MaxScore per range, merge
-    d_lo, d_hi = int(span["lo"]), int(span["hi"])
-    bounds = np.array(
-        [d_lo + (d_hi - d_lo + 1) * i // n_ranges
-         for i in range(1, n_ranges)], dtype=np.int64)
-
-    out_schema = _slice_schema(spark.read.parquet(paths.shards).schema)
-    col_names = [f.name for f in out_schema.fields]
-    sliced = shards.drop("n_docs_f", "avgdl_f", "docid_base").mapInPandas(
-        _slice_rows_fn(bounds, col_names), schema=out_schema)
-    sliced = (sliced.withColumn("n_docs_f", F.lit(float(n_docs)))
-              .withColumn("avgdl_f", F.lit(float(avgdl))))
-
-    def run_partial(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["qid"].iloc[0])
         lists = [_ListCursor(row, scorer) for row in pdf.itertuples(index=False)]
         ids, sc = maxscore_query(lists, kk, scorer_fn, eps=eps,
@@ -930,15 +863,45 @@ def search_bmm(spark: SparkSession, index_root: str,
         return pd.DataFrame({
             "qid": np.full(order.size, qid, dtype=np.int64),
             "docid": ids[order],
+            "rank": np.arange(1, order.size + 1, dtype=np.int64),
             "score": sc[order],
         })
 
-    partials = sliced.groupBy("qid", "range_id").applyInPandas(
-        run_partial, schema=_PARTIAL_SCHEMA)
+    def run_maxscore(lists: DataFrame, keys: list[str]) -> DataFrame:
+        return (lists.withColumn("n_docs_f", F.lit(float(n_docs)))
+                .withColumn("avgdl_f", F.lit(float(avgdl)))
+                .groupBy(*keys).applyInPandas(run_query, schema=_RESULT_SCHEMA))
+
+    if n_ranges > 1:
+        span = scan.agg(
+            F.min("first_docid").alias("lo"), F.max("last_docid").alias("hi")
+        ).collect()[0]                    # metadata columns only — blobs pruned
+        if span["lo"] is None:
+            # none of the query terms exist in the index (ADVICE round 2):
+            # the span agg over zero shard rows returns NULLs.  Collapse to
+            # the single-task path, whose applyInPandas over the empty shard
+            # frame yields the same empty result as the exact path.
+            n_ranges = 1
+
+    if n_ranges <= 1:
+        return resolve_docnos(run_maxscore(shards, ["qid"]), reader.docmap)
+
+    # ---- two-level path: slice by docid range, MaxScore per range, merge
+    d_lo, d_hi = int(span["lo"]), int(span["hi"])
+    bounds = np.array(
+        [d_lo + (d_hi - d_lo + 1) * i // n_ranges
+         for i in range(1, n_ranges)], dtype=np.int64)
+
+    out_schema = _slice_schema(reader.shards.schema)
+    col_names = [f.name for f in out_schema.fields]
+    sliced = shards.drop("docid_base").mapInPandas(
+        _slice_rows_fn(bounds, col_names), schema=out_schema)
+    # per-range ranks are meaningless once ranges merge
+    partials = run_maxscore(sliced, ["qid", "range_id"]).drop("rank")
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     results = (
         partials.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= kk)
         .select("qid", "docid", "rank", "score")
     )
-    return resolve_docnos(results, spark.read.parquet(paths.docmap))
+    return resolve_docnos(results, reader.docmap)

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 from searchenginepp_spark.config import (
     BM25_B, BM25_K1, DOCID_START, SKIP_BLOCK_SIZE,
 )
+from searchenginepp_spark.frames import _local_df
 from searchenginepp_spark.functions.codecs import (
     delta_encode, unary_encode, unary_value_bit_offsets, varbyte_encode,
     varbyte_value_offsets,
@@ -146,8 +147,6 @@ def doclen_jvm(corpus: DataFrame) -> DataFrame:
     from searchenginepp_spark.functions.stop_words import stop_words
 
     spark = corpus.sparkSession
-    from searchenginepp_spark.operators.query import _local_df
-
     sw = _local_df(spark, [(w,) for w in sorted(stop_words())], "tok string")
     toks = (
         corpus.select(
@@ -412,18 +411,6 @@ def build_index_shards(postings: DataFrame, avgdl: float,
     cover every term (inner join); without it one is derived from the
     postings.  Applicability bound: the vocab must fit a broadcast
     (build_index auto-selects dict only below dict_max_vocab terms).
-
-    transfer="group" replaces steps 2-3 with a JVM collect_list aggregation:
-    groupBy(term, salt) → array_sort → one array<struct> row per group →
-    mapInArrow decodes the list offsets zero-copy.  The term string then
-    crosses the JVM→Python Arrow boundary (and, via map-side partial agg,
-    the shuffle wire) once per GROUP instead of once per POSTING — the
-    measured residual cost of the encode stage (CLAUDE.md).  Trade-offs:
-    per-task agg buffers hold full groups (≤ salt_target postings ≈
-    salt_target·16 B raw each) and partition count follows
-    spark.sql.shuffle.partitions / AQE instead of `num_partitions`; cap
-    Arrow batches with spark.sql.execution.arrow.maxBytesPerBatch on
-    memory-tight executors.
     """
     if heavy is None:
         heavy = (
@@ -442,8 +429,6 @@ def build_index_shards(postings: DataFrame, avgdl: float,
         )
         .drop("n_buckets")
     )
-    if transfer == "group":
-        return _build_shards_grouped(salted, block_size, avgdl)
     if transfer == "dict":
         return _build_shards_dict(salted, block_size, avgdl,
                                   num_partitions, vocab)
@@ -596,56 +581,6 @@ def _build_shards_dict(salted: DataFrame, block_size: int, avgdl: float,
     final_cols = [f.name for f in _SHARD_SCHEMA.fields]
     return (encoded.join(F.broadcast(vocab), "term_id")
             .select(*final_cols))
-
-
-def _build_shards_grouped(salted: DataFrame, block_size: int,
-                          avgdl: float) -> DataFrame:
-    """transfer="group" encode path (see build_index_shards docstring):
-    JVM-side groupBy(term, salt) + array_sort(collect_list(struct)) builds
-    one array<struct<docid,tf,doclen>> row per posting group, so the Arrow
-    boundary ships the term string once per group; the kernel reads the
-    list offsets + int child arrays zero-copy and encodes group-at-a-time.
-    Groups never span batches (one row IS one group) — no carry buffer."""
-    import pyarrow as pa
-
-    grouped = (
-        salted.select(
-            "term", F.col("salt").cast("int").alias("salt"),
-            F.struct(
-                F.col("docid"),
-                F.col("tf").cast("int").alias("tf"),
-                F.col("doclen").cast("int").alias("doclen")).alias("p"))
-        .groupBy("term", "salt")
-        .agg(F.array_sort(F.collect_list("p")).alias("plist"))
-        # restore (term, salt) clustering for parquet row-group min/max
-        # pruning on term — agg output order is hash-arbitrary
-        .sortWithinPartitions("term", "salt")
-    )
-    pa_shard = _pa_shard_schema()
-
-    def encode_grouped(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            terms = batch.column("term")
-            salts = batch.column("salt").to_numpy(zero_copy_only=False)
-            pl = batch.column("plist")
-            offs = pl.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = pl.values          # offsets index into the child arrays
-            docids = vals.field("docid").to_numpy(zero_copy_only=False)
-            tfs = vals.field("tf").to_numpy(zero_copy_only=False)
-            dls = vals.field("doclen").to_numpy(zero_copy_only=False)
-            rows = [
-                _encode_one(terms[i].as_py(), salts[i],
-                            docids[offs[i]:offs[i + 1]],
-                            tfs[offs[i]:offs[i + 1]],
-                            dls[offs[i]:offs[i + 1]],
-                            block_size, avgdl)
-                for i in range(batch.num_rows)
-            ]
-            yield pa.RecordBatch.from_pylist(rows, schema=pa_shard)
-
-    return grouped.mapInArrow(encode_grouped, schema=_SHARD_SCHEMA)
 
 
 def index_size_report(spark: SparkSession, paths: "IndexPaths") -> dict:
@@ -932,7 +867,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out: str | IndexPaths,
     postings), small by count (≤ dict_max_vocab) AND small by estimated
     broadcast bytes (ADVICE round 4 — a multi-million-row string broadcast
     costs hundreds of MB of executor heap), else "row".  Explicit
-    "row"/"dict"/"group" overrides.
+    "row"/"dict" overrides.
     """
     import time
 
@@ -1052,8 +987,6 @@ def _build_index_passes(spark, corpus, paths, stem, salt_target,
 
     n_docs = int(obs.get["n_docs"])
     sum_doclen = int(obs.get["sum_doclen"] or 0)
-    from searchenginepp_spark.operators.query import _local_df
-
     (_local_df(spark, [(n_docs, sum_doclen)], "n_docs long, sum_doclen long")
      .write.mode("overwrite").parquet(paths.stats))
     avgdl = sum_doclen / n_docs if n_docs else 0.0
@@ -1132,8 +1065,6 @@ def _build_index_passes(spark, corpus, paths, stem, salt_target,
                 .collect()                # head terms only — tiny
             )
     if heavy_rows:
-        from searchenginepp_spark.operators.query import _local_df
-
         heavy = _local_df(spark,
                           [(r["term"], r["n_buckets"]) for r in heavy_rows],
                           "term string, n_buckets long")

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchenginepp_spark.frames import _local_df
 from searchenginepp_spark.operators.index_build import IndexPaths
 
 # per-segment shard-id offset keeps (term, shard) unique across segments
@@ -160,8 +161,6 @@ def merge_indexes(spark: SparkSession, roots: list[str],
 
     docmap.write.mode("overwrite").parquet(paths.docmap)
     shards.write.mode("overwrite").parquet(paths.shards)
-    from searchenginepp_spark.operators.query import _local_df
-
     (_local_df(spark,
                [(sum(int(r["n_docs"]) for r in stats_rows),
                  sum(int(r["sum_doclen"] or 0) for r in stats_rows))],

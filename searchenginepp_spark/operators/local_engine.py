@@ -6,7 +6,8 @@ scheduling floor, which is the wrong tool for point queries — the Spark-
 first split is: Spark builds/maintains the index tables; a serving process
 reads them directly through pyarrow with predicate pushdown (parquet
 row-group pruning on the term-sorted shard table — the same data skipping
-the Spark scan gets) and runs the SAME MaxScore kernel and codecs in-process.
+the Spark scan gets; `index_reader.IndexReader` does the reads) and runs
+the SAME MaxScore kernel and codecs in-process.
 
 No Spark session is involved at query time; rank-identity with the
 cluster paths is pinned by tests/test_local_engine.py.
@@ -14,91 +15,31 @@ cluster paths is pinned by tests/test_local_engine.py.
 Scale note: a serving node holds the global lexicon (term → df; tens of
 MB per 10^8 terms) and streams posting blobs per query.  The docmap is
 consulted only for the final k docnos via a filtered read (docmap parquet
-is docid-ordered ⇒ row-group stats prune).
+is docid-ordered ⇒ row-group stats prune).  Posting-list cursors and
+docnos stay in the reader's one bounded LRU, so repeat terms skip the
+parquet read (the analogue of the reference's warm mmap pages).
 """
 
 from __future__ import annotations
 
-from types import SimpleNamespace
 from typing import Iterable
 
 import numpy as np
-import pyarrow.dataset as pads
-import pyarrow.parquet as pq
 
 from searchenginepp_spark.config import (
     BM25_B, BM25_K1, DEFAULT_TOP_K,
 )
-from searchenginepp_spark.operators.bmm import (
-    _ListCursor, _make_scorer, maxscore_query,
-)
-from searchenginepp_spark.operators.index_build import IndexPaths
-
-_SHARD_COLS = ["term", "df_shard", "docid_blob", "tf_blob", "doclen_blob",
-               "sigma_bm25_part", "sigma_tfidf_part", "avgdl_encode", "skips"]
+from searchenginepp_spark.operators.bmm import _make_scorer, maxscore_query
+from searchenginepp_spark.operators.index_reader import IndexReader
 
 
 class LocalSearcher:
     """In-process top-k search over a persisted index directory."""
 
-    def __init__(self, index_root: str, stem: bool = True,
-                 cursor_cache_terms: int = 100_000):
-        self.paths = IndexPaths(index_root)
+    def __init__(self, index_root: str, stem: bool = True):
+        self.reader = IndexReader(index_root)
         self.stem = stem
-        stats = pq.read_table(self.paths.stats).to_pylist()[0]
-        self.n_docs = int(stats["n_docs"])
-        self.avgdl = (stats["sum_doclen"] / self.n_docs) if self.n_docs else 0.0
-        lex = pq.read_table(self.paths.lexicon)
-        self.df_by_term = dict(zip(lex.column("term").to_pylist(),
-                                   lex.column("df").to_pylist()))
-        self._shards_ds = pads.dataset(self.paths.shards, format="parquet")
-        self._docmap_ds = pads.dataset(self.paths.docmap, format="parquet")
-        # (term, scorer) → [cursor] — the analogue of the reference's warm
-        # mmap pages (repeat terms skip the parquet read entirely)
-        self._cursor_cache: dict[tuple[str, str], list] = {}
-        self._cursor_cache_cap = cursor_cache_terms
-        self._docno_cache: dict[int, str] = {}
-
-    def _load_cursors(self, terms: list[str], scorer: str) -> dict[str, list]:
-        by_term: dict[str, list] = {}
-        missing = []
-        for t in terms:
-            hit = self._cursor_cache.get((t, scorer))
-            if hit is not None:
-                by_term[t] = hit
-            else:
-                missing.append(t)
-        if missing:
-            cols = [c for c in _SHARD_COLS
-                    if c in self._shards_ds.schema.names]  # pre-avgdl indexes
-            tbl = self._shards_ds.to_table(
-                columns=cols,
-                filter=pads.field("term").isin(missing))
-            fresh: dict[str, list] = {t: [] for t in missing}
-            for row in tbl.to_pylist():
-                row["df_global"] = self.df_by_term[row["term"]]
-                row["n_docs_f"] = float(self.n_docs)
-                row["avgdl_f"] = float(self.avgdl)
-                fresh[row["term"]].append(
-                    _ListCursor(SimpleNamespace(**row), scorer))
-            if len(self._cursor_cache) + len(fresh) > self._cursor_cache_cap:
-                self._cursor_cache.clear()
-            for t, cur in fresh.items():
-                self._cursor_cache[(t, scorer)] = cur
-                by_term[t] = cur
-        return by_term
-
-    def _docnos(self, docids: list[int]) -> dict[int, str]:
-        missing = [d for d in docids if d not in self._docno_cache]
-        if missing:
-            tbl = self._docmap_ds.to_table(
-                columns=["docid", "docno"],
-                filter=pads.field("docid").isin(missing))
-            if len(self._docno_cache) > 10_000_000:
-                self._docno_cache.clear()
-            self._docno_cache.update(zip(tbl.column("docid").to_pylist(),
-                                         tbl.column("docno").to_pylist()))
-        return {d: self._docno_cache[d] for d in docids}
+        self.df_by_term = self.reader.lexicon()
 
     def search(self, queries: Iterable[tuple[int, str]],
                k: int = DEFAULT_TOP_K, scorer: str = "bm25",
@@ -111,14 +52,16 @@ class LocalSearcher:
         Index.template.hpp:117-121; missing term ⇒ empty, :65-73)."""
         from searchenginepp_spark.operators.query import query_terms_local
 
-        scorer_fn = _make_scorer(scorer, float(self.avgdl), BM25_K1, BM25_B)
+        scorer_fn = _make_scorer(scorer, float(self.reader.avgdl), BM25_K1,
+                                 BM25_B)
         eps = 10.0 ** -round_to if round_to is not None else 0.0
         qt = query_terms_local(queries, stem=self.stem)
         by_qid: dict[int, list[str]] = {}
         for qid, term in qt:
             by_qid.setdefault(qid, []).append(term)
         all_terms = sorted({t for _, t in qt if t in self.df_by_term})
-        cursors_by_term = self._load_cursors(all_terms, scorer) if all_terms else {}
+        cursors_by_term = self.reader.cursors(all_terms, scorer,
+                                              self.df_by_term)
 
         out: list[tuple[int, int, str, int, float]] = []
         need_docids: set[int] = set()
@@ -145,7 +88,7 @@ class LocalSearcher:
             per_q[qid] = (ids[order], sc[order])
             need_docids.update(ids[order].tolist())
 
-        docno = self._docnos(sorted(need_docids))
+        docno = self.reader.docnos(sorted(need_docids))
         return self._format(per_q, docno, out)
 
     def _conjunctive(self, terms, cursors_by_term, scorer_fn):

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
 )
 
 from searchenginepp_spark.config import BM25_B, BM25_K1, DEFAULT_TOP_K
+from searchenginepp_spark.frames import _local_df
+from searchenginepp_spark.operators.index_reader import IndexReader
 
 
 def queries_df(spark: SparkSession, queries: Iterable[tuple[int, str]]) -> DataFrame:
@@ -73,79 +75,13 @@ def query_terms_local(queries: Iterable[tuple[int, str]],
     return out
 
 
-def _local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Single-partition DataFrame from a tiny driver-side row list.
-
-    createDataFrame(list) parallelizes into defaultParallelism Python-
-    evaluated slices — a 5-row query frame then schedules ~100 near-empty
-    tasks on every job that touches it, and coalescing afterwards is worse
-    (one task computing ~100 sequential Python partitions, measured ~12 s).
-    parallelize(rows, 1) keeps it to ONE Python partition.
-
-    When every column is BIGINT/STRING and no value is None, the frame is
-    built as a SQL inline table (VALUES ...) instead: Catalyst plans a
-    LocalTableScan with known row statistics, and a broadcast build over it
-    materializes driver-side with ZERO scheduled jobs and ZERO Python-worker
-    round-trips, where the parallelize frame pays one 1-task Python job per
-    broadcast build (measured: a shard⋈qterms broadcast join 270 → 102 ms
-    warm at 100k docs/local[32]).  Falls back to the parallelize frame for
-    other types, None values, large row lists (inline-table parse is
-    O(rows)), or sessions with spark.sql.parser.escapedStringLiterals=true
-    (the literal escaping below targets the default lexer)."""
-    if not rows:
-        return spark.createDataFrame([], schema=schema)
-    df = _values_df(spark, rows, schema)
-    if df is not None:
-        return df
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema=schema)
-
-
-_VALUES_MAX_ROWS = 10_000
-
-
-def _values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame | None:
-    """Inline-table (LocalRelation) build of a tiny long/string frame, or
-    None when `rows`/`schema`/session conf make the SQL path unsafe."""
-    cols = []
-    for field in schema.split(","):
-        parts = field.strip().split()
-        if len(parts) != 2 or parts[1].lower() not in ("long", "bigint",
-                                                       "string"):
-            return None
-        cols.append((parts[0], parts[1].lower()))
-    if len(rows) > _VALUES_MAX_ROWS:
-        return None
-    try:
-        if spark.conf.get("spark.sql.parser.escapedStringLiterals",
-                          "false") == "true":
-            return None
-    except Exception:
-        return None
-    lits = []
-    for row in rows:
-        if len(row) != len(cols):
-            return None
-        vals = []
-        for v, (_, typ) in zip(row, cols):
-            if typ == "string":
-                if not isinstance(v, str):
-                    return None
-                vals.append(
-                    "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'")
-            else:
-                if not isinstance(v, int) or isinstance(v, bool) \
-                        or not (-(2 ** 63) <= v < 2 ** 63):
-                    return None
-                vals.append(f"{v}L")
-        lits.append("(" + ",".join(vals) + ")")
-    names = ",".join(f"`{c}`" for c, _ in cols)
-    return spark.sql(
-        f"SELECT * FROM (VALUES {','.join(lits)}) AS t({names})")
-
-
 def query_terms_df(spark: SparkSession, qterms: list[tuple[int, str]]) -> DataFrame:
     return _local_df(spark, qterms, "qid long, term string")
+
+
+def lexicon_df(spark: SparkSession, df_by_term: dict[str, int]) -> DataFrame:
+    """A lexicon slice (`IndexReader.df`) as a tiny (term, df) frame."""
+    return _local_df(spark, sorted(df_by_term.items()), "term string, df long")
 
 
 def _score_col(scorer: str, avgdl: float):
@@ -339,50 +275,21 @@ def search(spark: SparkSession, index_root: str,
     The term predicate is pushed into the parquet scan of the term-sorted
     shard table before any decode happens.
     """
-    from searchenginepp_spark.operators.index_build import IndexPaths
-
     return Searcher(spark, index_root, stem=stem).search(
         queries, k=k, scorer=scorer, conjunctive=conjunctive)
 
 
 class Searcher:
-    """Reusable query engine over a persisted index — loads collection
-    stats once at construction (the analogue of the reference engine's
-    startup mmap of metadata/lexicon, engine.cpp:30-59) so repeated
+    """Reusable query engine over a persisted index.  Its `IndexReader`
+    reads collection stats once at construction (the analogue of the
+    reference engine's startup read of metadata/lexicon, engine.cpp:30-59)
+    and the |query terms| lexicon rows per call, driver-side — so repeated
     searches pay only the scoring job itself."""
 
     def __init__(self, spark: SparkSession, index_root: str, stem: bool = True):
-        from searchenginepp_spark.operators.index_build import IndexPaths
-
         self.spark = spark
-        self.paths = IndexPaths(index_root)
+        self.reader = IndexReader(index_root, spark)
         self.stem = stem
-        stats = spark.read.parquet(self.paths.stats).collect()[0]
-        self.n_docs = int(stats["n_docs"])
-        self.avgdl = (stats["sum_doclen"] / self.n_docs) if self.n_docs else 0.0
-        self.lexicon = spark.read.parquet(self.paths.lexicon)
-        self.docmap = spark.read.parquet(self.paths.docmap)
-        self.shards = spark.read.parquet(self.paths.shards)
-
-    def _lexicon_slice(self, terms: list[str]) -> DataFrame:
-        """The |query terms| lexicon rows as a 1-partition local frame via
-        a driver-side pyarrow read (row-group pruned — the serving
-        reader's pattern; the broadcast build otherwise runs a parquet
-        scan job per search call).  Falls back to a filtered Spark scan
-        (`term IN (...)` pushed down) for filesystems pyarrow cannot
-        reach.  Only the queried terms' rows are ever read — the full
-        lexicon never lands on the driver."""
-        try:
-            import pyarrow.dataset as pads
-
-            tbl = pads.dataset(self.paths.lexicon, format="parquet").to_table(
-                columns=["term", "df"],
-                filter=pads.field("term").isin(terms))
-            pairs = sorted(zip(tbl.column("term").to_pylist(),
-                               (int(d) for d in tbl.column("df").to_pylist())))
-            return _local_df(self.spark, pairs, "term string, df long")
-        except Exception:
-            return self.lexicon.filter(F.col("term").isin(terms))
 
     def search(self, queries: Iterable[tuple[int, str]],
                k: int = DEFAULT_TOP_K, scorer: str = "bm25",
@@ -394,14 +301,14 @@ class Searcher:
             return self.spark.createDataFrame(
                 [], schema="qid long, docid long, docno string, rank long, "
                            "score double")
-        shards = self.shards.filter(F.col("term").isin(terms))
+        shards = self.reader.shards.filter(F.col("term").isin(terms))
         postings = decode_shards(shards)
-        lexicon = self._lexicon_slice(terms)
-        scored = score_postings(postings, lexicon, qterms, self.n_docs,
-                                self.avgdl, scorer)
+        lexicon = lexicon_df(self.spark, self.reader.df(terms))
+        scored = score_postings(postings, lexicon, qterms, self.reader.n_docs,
+                                self.reader.avgdl, scorer)
         results = topk(scored, qterms, lexicon, k=k,
                        conjunctive=conjunctive)
-        return resolve_docnos(results, self.docmap)
+        return resolve_docnos(results, self.reader.docmap)
 
     def search_bmm(self, queries: Iterable[tuple[int, str]],
                    k: int = DEFAULT_TOP_K, scorer: str = "bm25",
@@ -409,5 +316,5 @@ class Searcher:
         """Block-Max MaxScore fast path (disjunctive) over this index."""
         from searchenginepp_spark.operators.bmm import search_bmm
 
-        return search_bmm(self.spark, self.paths.root, queries, k=k,
+        return search_bmm(self.spark, self.reader, queries, k=k,
                           scorer=scorer, stem=self.stem, n_ranges=n_ranges)

@@ -21,6 +21,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from searchenginepp_spark.frames import _local_df
+
 N_PLANES = 16
 
 
@@ -158,8 +160,6 @@ def _centroid_table(embeddings: DataFrame, n_centroids: int,
             .select("centroid_id", "ce", "cnorm")
         )
     if not isinstance(centroids, DataFrame):
-        from searchenginepp_spark.operators.query import _local_df
-
         rows = [(i + 1, [float(x) for x in c]) for i, c in enumerate(centroids)]
         centroids = _local_df(embeddings.sparkSession, rows,
                               "centroid_id long, embedding array<double>")

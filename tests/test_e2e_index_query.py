@@ -157,10 +157,10 @@ def test_index_size_report(spark, built):
 
 
 def test_grouped_transfer_encodes_identically(spark):
-    """build_index_shards(transfer="group") — the JVM collect_list variant
-    that ships one term string per GROUP across the Arrow boundary — must
-    produce byte-identical shard rows to the default sorted-row path
-    (same blobs, same skips, same σ)."""
+    """build_index_shards(transfer="dict") — the int32 term_id transfer
+    that restores the term string after encoding — must produce
+    byte-identical shard rows to the sorted-row path (same blobs, same
+    skips, same σ)."""
     from searchenginepp_spark.operators.index_build import (
         build_index_shards, explode_postings,
     )
@@ -187,12 +187,11 @@ def test_grouped_transfer_encodes_identically(spark):
 
     row = canon(build_index_shards(postings, float(avgdl),
                                    salt_target=64, block_size=16))
-    grp = canon(build_index_shards(postings, float(avgdl), salt_target=64,
-                                   block_size=16, transfer="group"))
     dct = canon(build_index_shards(postings, float(avgdl), salt_target=64,
                                    block_size=16, transfer="dict"))
+    with pytest.raises(ValueError, match="unknown transfer mode"):
+        build_index_shards(postings, float(avgdl), transfer="group")
     postings.unpersist()
-    assert row == grp
     assert row == dct
     assert len(row) > 200       # salting + multi-term corpus actually engaged
 

@@ -52,34 +52,16 @@ def test_search_plan_shape(spark, built):
 def test_lexicon_slice_driver_side(spark, built):
     """The query-terms lexicon slice is read driver-side via pyarrow: no
     lexicon parquet scan appears in the query plan (one Spark job per
-    search call removed), and the slice matches the Spark-filtered read."""
+    search call removed), and the slice matches the Spark-filtered read.
+    The Spark-backend read is pinned in tests/test_index_reader.py."""
     s = Searcher(spark, built)
     df = s.search([(1, "sym1")], k=5)
     plan = _formatted_plan(df)
     assert "global_lexicon" not in plan, "lexicon should be read driver-side"
-    got = sorted((r.term, r.df) for r in s._lexicon_slice(["sym1"]).collect())
+    got = sorted(s.reader.df(["sym1"]).items())
     want = sorted((r.term, r.df)
-                  for r in s.lexicon.filter(F.col("term") == "sym1")
-                                    .select("term", "df").collect())
+                  for r in spark.read.parquet(s.reader.paths.lexicon)
+                                .filter(F.col("term") == "sym1")
+                                .select("term", "df").collect())
     assert got == want
     assert got, "slice must contain the queried term"
-
-
-def test_lexicon_fallback_scan_prunes_columns(spark, built, monkeypatch):
-    """When pyarrow cannot reach the filesystem, the Spark fallback scan
-    must push `term IN (...)` down and read only (term, df), never the
-    blobs."""
-    import pyarrow.dataset as pads
-
-    def _boom(*a, **k):
-        raise OSError("pyarrow unavailable for this filesystem")
-
-    monkeypatch.setattr(pads, "dataset", _boom)
-    df = Searcher(spark, built).search([(1, "sym1")], k=5)
-    plan = _formatted_plan(df)
-    lex_scans = [b for b in plan.split("\n\n")
-                 if "Scan parquet" in b and "global_lexicon" in b]
-    assert lex_scans, "fallback lexicon scan missing from plan"
-    for b in lex_scans:
-        assert "docid_blob" not in b
-        assert "ReadSchema: struct<term:string,df:bigint>" in b

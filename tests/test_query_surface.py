@@ -78,7 +78,8 @@ def test_local_df_values_path(spark):
     round-trip exactly — including SQL-metacharacter strings — and fall
     back to the parallelize frame for anything the literal path cannot
     represent."""
-    from searchenginepp_spark.operators.query import _local_df, _values_df
+    from searchenginepp_spark import frames
+    from searchenginepp_spark.frames import _local_df, _values_df
 
     rows = [(1, "don't"), (2, "a\\b"), (3, "x'y\\"), (4, "unié中"),
             (5, "plain")]
@@ -92,18 +93,20 @@ def test_local_df_values_path(spark):
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, rdd_df.collect()))
 
     # fallbacks: non-long/string schema, None values, oversized lists,
-    # escapedStringLiterals sessions
+    # backticks in a column name, escapedStringLiterals sessions (the conf
+    # is a case-insensitive boolean)
     assert _values_df(spark, [(1, 0.5)], "a long, b double") is None
     assert _values_df(spark, [(1, None)], "a long, b string") is None
     assert _values_df(spark, [(1, 2 ** 63)], "a long, b long") is None
-    from searchenginepp_spark.operators import query as qmod
-    big = [(i, "t") for i in range(qmod._VALUES_MAX_ROWS + 1)]
+    big = [(i, "t") for i in range(frames._VALUES_MAX_ROWS + 1)]
     assert _values_df(spark, big, "a long, b string") is None
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        assert _values_df(spark, rows, "qid long, term string") is None
-        # _local_df still returns correct rows through the fallback
-        fb = _local_df(spark, rows, "qid long, term string")
-        assert sorted((r.qid, r.term) for r in fb.collect()) == rows
-    finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    assert _values_df(spark, [(1, "t")], "q`id long, term string") is None
+    for conf in ("true", "TRUE"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", conf)
+        try:
+            assert _values_df(spark, rows, "qid long, term string") is None
+            # _local_df still returns correct rows through the fallback
+            fb = _local_df(spark, rows, "qid long, term string")
+            assert sorted((r.qid, r.term) for r in fb.collect()) == rows
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
